@@ -7,12 +7,18 @@ routed through a :class:`CheckpointedRun`, which
   table — the snapshot commit *is* the lineage truncation (the plan reads
   back from parquet, so the DAG never grows across supersteps), and the
   atomic manifest swap makes every completed superstep a durable resume
-  point;
-- appends per-partition lineage rows ``(run_id, state, superstep,
-  partition_id, rows)`` — the queryable analogue of the reference's debug
-  dumps (elektra connectivity.h:466-534);
-- appends frontier metrics ``(run_id, state, superstep, frontier, seconds)``
-  — mirroring the reference's timers (benchmarks/get_time.h) but as a table.
+  point. The write is the commit's one Spark job: the read-back uses the
+  schema the commit recorded;
+- exposes lineage ``(run_id, state, superstep, partition_id, rows,
+  committed_at)`` — the queryable analogue of the reference's debug dumps
+  (elektra connectivity.h:466-534) — derived from the per-file row counts
+  each state commit records in its manifest entry, so lineage costs no job
+  and is atomic with the state it describes (``partition_id`` is the output
+  file's index);
+- records frontier metrics ``(run_id, state, superstep, frontier, seconds,
+  committed_at)`` — mirroring the reference's timers (benchmarks/get_time.h)
+  but as a table — as metadata rows in the state table's manifest, again
+  without a Spark job.
 
 Resume contract: ``latest_step()`` returns the last durably committed
 superstep; operators accept ``start_step``/``init_*`` to continue
@@ -24,17 +30,22 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .tables import SnapshotCatalog
 
+LINEAGE_SCHEMA = (
+    "run_id string, state string, superstep int, partition_id int, rows long, committed_at double"
+)
+METRICS_SCHEMA = (
+    "run_id string, state string, superstep int, frontier long, seconds double, committed_at double"
+)
+
 
 class CheckpointedRun:
-    def __init__(self, spark: SparkSession, root: str, run_id: str, lineage: bool = True):
+    def __init__(self, spark: SparkSession, root: str, run_id: str):
         self.spark = spark
         self.run_id = run_id
         self.catalog = SnapshotCatalog(spark, root)
-        self.lineage = lineage
 
     def _state_table(self, state: str) -> str:
         return f"{self.run_id}_{state}"
@@ -43,25 +54,12 @@ class CheckpointedRun:
     def checkpoint_fn(self, state: str = "labels"):
         def _cp(df: DataFrame, step: int) -> DataFrame:
             if step < 0:
-                # static relations (edge lists, adjacency): materialize only
+                # static relations and start states: materialize only
                 return df.localCheckpoint(eager=True)
-            self.catalog.write(self._state_table(state), df, operation=f"superstep={step}")
-            out = self.catalog.read(self._state_table(state))
-            if self.lineage:
-                part_rows = (
-                    out.groupBy(F.spark_partition_id().alias("partition_id"))
-                    .agg(F.count("*").alias("rows"))
-                    .withColumn("run_id", F.lit(self.run_id))
-                    .withColumn("state", F.lit(state))
-                    .withColumn("superstep", F.lit(step))
-                    .withColumn("committed_at", F.lit(time.time()))
-                    .select("run_id", "state", "superstep", "partition_id", "rows", "committed_at")
-                )
-                if self.catalog.exists("lineage"):
-                    self.catalog.append("lineage", part_rows)
-                else:
-                    self.catalog.write("lineage", part_rows)
-            return out
+            name = self._state_table(state)
+            self.catalog.write(name, df, operation=f"superstep={step}",
+                               summary={"run_id": self.run_id, "state": state})
+            return self.catalog.read(name)
 
         # operators whose state lives outside the DataFrame plan (the bsp
         # PageRank kernel's bucket files) key per-superstep durable commits
@@ -77,14 +75,10 @@ class CheckpointedRun:
     # -- frontier metrics hook (plugs into operators' `on_superstep=`) ------
     def metrics_hook(self, state: str = "labels"):
         def _hook(step: int, frontier: int, seconds: float) -> None:
-            row = self.spark.createDataFrame(
-                [(self.run_id, state, int(step), int(frontier), float(seconds), time.time())],
-                "run_id string, state string, superstep int, frontier long, seconds double, committed_at double",
-            )
-            if self.catalog.exists("metrics"):
-                self.catalog.append("metrics", row)
-            else:
-                self.catalog.write("metrics", row)
+            self.catalog.annotate(self._state_table(state), "metrics", {
+                "run_id": self.run_id, "state": state, "superstep": int(step),
+                "frontier": int(frontier), "seconds": float(seconds), "committed_at": time.time(),
+            })
 
         return _hook
 
@@ -108,7 +102,19 @@ class CheckpointedRun:
         return self.catalog.read(name, version=version)
 
     def lineage_table(self) -> DataFrame:
-        return self.catalog.read("lineage")
+        """Per-file row counts of every superstep commit under the catalog
+        root, read from the state tables' manifests."""
+        rows = [
+            (snap["summary"]["run_id"], snap["summary"]["state"], int(snap["operation"].split("=")[1]),
+             i, f["rows"], snap["committed_at"])
+            for name in self.catalog.tables()
+            for snap in self.catalog.history(name)
+            if "run_id" in snap.get("summary", {})
+            for i, f in enumerate(snap["files"])
+        ]
+        return self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
 
     def metrics_table(self) -> DataFrame:
-        return self.catalog.read("metrics")
+        """Every frontier-metrics row recorded under the catalog root."""
+        rows = [r for name in self.catalog.tables() for r in self.catalog.annotations(name, "metrics")]
+        return self.spark.createDataFrame(rows, METRICS_SCHEMA)

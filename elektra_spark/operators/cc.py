@@ -68,7 +68,9 @@ def _no_aqe(spark: SparkSession):
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 # CheckpointFn contract: callable (state_df, step) -> materialized state_df;
-# step < 0 marks a static relation (materialize only, no commit). Optional
+# step < 0 means materialize only, no commit: static relations, and an
+# operator's start state (the snapshot a resume loaded, or the initial
+# state, which no resume needs). Optional
 # attribute ``durable: bool`` — operators whose working state lives OUTSIDE
 # the DataFrame plan (the bsp PageRank kernel's bucket files) read it via
 # getattr to decide per-superstep catalog commits. The flag lives on the
@@ -76,7 +78,7 @@ def _no_aqe(spark: SparkSession):
 # decorator) silently drops it and downgrades to end-of-run-only commits:
 # wrappers must re-set ``wrapper.durable = inner.durable``
 # (CheckpointedRun.checkpoint_fn sets it; EphemeralCheckpointer deliberately
-# lacks it). See elektra_spark/checkpoint.py:70.
+# lacks it). See CheckpointedRun.checkpoint_fn.
 # Liveness: EphemeralCheckpointer additionally assumes a SINGLE state chain
 # (each call's output is consumed only by the next call's input); loops that
 # retain several live frames per round must use RetainedCheckpointer.
@@ -330,7 +332,9 @@ def _min_label_loop(
 ) -> DataFrame:
     both = checkpoint(both, -1)  # materialize once; reused every superstep
 
-    labels = checkpoint(labels.select("vid", "label"), start_step)
+    # start state: materialized, not committed (a resume loaded it from a
+    # commit; a fresh run's initial labelling needs no resume point)
+    labels = checkpoint(labels.select("vid", "label"), -1)
     for step in range(start_step, start_step + max_iter):
         t0 = time.time()
         # Superstep = hash-to-min cluster exchange, two aggregations:

@@ -47,10 +47,12 @@ def label_propagation(
         checkpoint = EphemeralCheckpointer()
     with _no_aqe(edges.sparkSession):
         both = checkpoint(both, -1)
+        # the start state is materialized, never committed: it is either the
+        # snapshot a resume loaded or the initial labelling
         if init_labels is not None:
-            labels = checkpoint(init_labels.select("vid", "label"), start_step)
+            labels = checkpoint(init_labels.select("vid", "label"), -1)
         else:
-            labels = checkpoint(universe.withColumn("label", F.col("vid")), start_step)
+            labels = checkpoint(universe.withColumn("label", F.col("vid")), -1)
 
         for step in range(start_step, start_step + rounds):
             t0 = time.time()

@@ -964,16 +964,18 @@ def pagerank(
             no_in = dangling
             has_no_in = has_dangling
 
+        # the start state is materialized, never committed: it is either
+        # the snapshot a resume loaded or the uniform initial ranks
         if init_ranks is not None:
             ranks = checkpoint(
                 init_ranks.select(F.col("vid").cast(key_t).alias("vid"), "rank")
                 .repartition(parts, "vid"),
-                start_step,
+                -1,
             )
         else:
             ranks = checkpoint(
                 universe_k.withColumn("rank", F.lit(1.0 / n)).repartition(parts, "vid"),
-                start_step,
+                -1,
             )
 
         for step in range(start_step, start_step + n_iter):

@@ -26,8 +26,6 @@ import uuid
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-
 # glibc malloc tuning for every process launched under the session (the JVM
 # inherits the driver's environment and the forked Python UDF workers inherit
 # the JVM's). Without this, NumPy buffers above the 128 KiB mmap threshold are
@@ -65,7 +63,7 @@ def iceberg_configs(warehouse: str) -> dict[str, str]:
 def get_spark(
     app_name: str = "elektra-spark",
     master: str | None = None,
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
+    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for the engine.
@@ -75,7 +73,13 @@ def get_spark(
     inside a JVM-launched Python (detected via PYSPARK_GATEWAY_PORT) whose
     master is already configured, and overriding it would silently run the
     documented cluster invocation in local mode on the driver.
+
+    ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_SHUFFLE_PARTITIONS``
+    (32 when unset), read at call time so a program may set it after
+    importing the engine.
     """
+    if shuffle_partitions is None:
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
     apply_malloc_env()  # must precede JVM launch so UDF workers inherit it
     under_spark_submit = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not under_spark_submit:

@@ -1,8 +1,9 @@
 """Snapshot-versioned local table catalog — the engine's Iceberg stand-in.
 
 The production engine keeps all mutable state (the ``edges`` table, per-superstep
-``labels``/``ranks`` checkpoints, ``lineage`` and ``metrics``) in Iceberg tables
-and applies batch edge updates as ``MERGE INTO`` deltas (SURVEY.md §1.5, §7.5;
+``labels``/``ranks`` checkpoints with their lineage and metrics as commit
+metadata) in Iceberg tables and applies batch edge updates as ``MERGE INTO``
+deltas (SURVEY.md §1.5, §7.5;
 reference semantics: ``InsertIntoEdgeTable``/``DeleteFromEdgeTable``,
 elektra connectivity.h:425-448). This sandbox ships no Iceberg runtime jar, so
 this module provides the minimal subset of table-format semantics the engine
@@ -18,6 +19,14 @@ JSON manifest:
   anti/semi joins and committed as a new snapshot — the same logical plan an
   Iceberg copy-on-write MERGE produces.
 - **Time travel**: ``read(version=...)`` + ``history()``.
+- **Commit metadata**: each snapshot's manifest entry records the table
+  schema and every new data file's row count, read from the parquet footers
+  on the driver (Iceberg's per-file ``record_count``). A commit is one Spark
+  job, the write; reads use the recorded schema instead of an inference
+  job. Checkpoint lineage is derived from these counts, and frontier metrics
+  are metadata rows added to a manifest by ``annotate`` — neither is a
+  table of its own. Manifests without a recorded schema (written by older
+  versions) still read, by inference.
 
 At 100 TB these operations are exactly Iceberg's, and
 :func:`elektra_spark.session.iceberg_configs` flips state storage to a real
@@ -34,6 +43,38 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footers(snap_dir: str) -> tuple[list[tuple[str, int]], StructType | None]:
+    """(file name, row count) per data file of a freshly written snapshot,
+    in file-name order, and the Spark schema the writer stored in the first
+    footer — read on the driver, no Spark job."""
+    import pyarrow.parquet as pq
+
+    files, schema = [], None
+    for fname in sorted(os.listdir(snap_dir)):
+        if not fname.startswith("part-"):
+            continue
+        meta = pq.read_metadata(os.path.join(snap_dir, fname))
+        files.append((fname, meta.num_rows))
+        if schema is None and _SPARK_SCHEMA_KEY in (meta.metadata or {}):
+            schema = StructType.fromJson(json.loads(meta.metadata[_SPARK_SCHEMA_KEY]))
+    return files, schema
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable — the schema
+    Spark's parquet inference reports."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 @dataclass
@@ -69,7 +110,13 @@ class SnapshotCatalog:
 
     # ---- core commit protocol --------------------------------------------
     def _commit(
-        self, name: str, df: DataFrame, operation: str, base_paths: list[str] | None = None
+        self,
+        name: str,
+        df: DataFrame,
+        operation: str,
+        base_paths: list[str] | None = None,
+        schema: StructType | None = None,
+        summary: dict | None = None,
     ) -> SnapshotInfo:
         """Write df as the next snapshot and atomically swap the manifest.
 
@@ -77,42 +124,66 @@ class SnapshotCatalog:
         new snapshot's file set (fast-append — the Iceberg append pattern:
         commit only the delta files, the manifest lists the full file set per
         snapshot instead of rewriting the table).
+
+        The write is the commit's only Spark job. The manifest entry records
+        the table schema (``schema``, else the written one) and each new
+        data file's row count, both read from the parquet footers on the
+        driver — Iceberg's per-file ``record_count`` — so reads skip schema
+        inference and lineage needs no scan. ``summary`` is free-form
+        snapshot metadata (Iceberg's snapshot summary).
         """
         man = self._load_manifest(name)
         version = (man["current"] or 0) + 1
         snap_dir = os.path.join(self._table_dir(name), f"v_{version}")
         df.write.mode("overwrite").parquet(snap_dir)
-        info = SnapshotInfo(version, snap_dir, time.time(), operation, None)
-        man["snapshots"].append(
-            {
-                "version": version,
-                "path": snap_dir,
-                "paths": (base_paths or []) + [snap_dir],
-                "committed_at": info.committed_at,
-                "operation": operation,
-            }
-        )
+        files, written = _footers(snap_dir)
+        schema = schema or written
+        info = SnapshotInfo(version, snap_dir, time.time(), operation, sum(n for _, n in files))
+        entry = {
+            "version": version,
+            "path": snap_dir,
+            "paths": (base_paths or []) + [snap_dir],
+            "committed_at": info.committed_at,
+            "operation": operation,
+            "files": [{"file": f, "rows": n} for f, n in files],
+        }
+        if schema is not None:
+            entry["schema"] = _nullable(schema).jsonValue()
+        if summary:
+            entry["summary"] = summary
+        man["snapshots"].append(entry)
         man["current"] = version
+        self._swap_manifest(name, man)
+        return info
+
+    def _swap_manifest(self, name: str, man: dict) -> None:
         tmp = self._manifest_path(name) + ".tmp"
         os.makedirs(self._table_dir(name), exist_ok=True)
         with open(tmp, "w") as f:
             json.dump(man, f)
         os.replace(tmp, self._manifest_path(name))  # atomic commit point
-        return info
+
+    def _snapshot(self, name: str, version: int | None = None) -> dict:
+        man = self._load_manifest(name)
+        if man["current"] is None:
+            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
+        version = version or man["current"]
+        return next(s for s in man["snapshots"] if s["version"] == version)
 
     # ---- public API --------------------------------------------------------
     def exists(self, name: str) -> bool:
         return self._load_manifest(name)["current"] is not None
 
-    def write(self, name: str, df: DataFrame, operation: str = "overwrite") -> SnapshotInfo:
-        return self._commit(name, df, operation)
+    def write(
+        self, name: str, df: DataFrame, operation: str = "overwrite", summary: dict | None = None
+    ) -> SnapshotInfo:
+        return self._commit(name, df, operation, summary=summary)
 
     def append(self, name: str, df: DataFrame) -> SnapshotInfo:
         """Fast-append: commit only the delta files; the new snapshot's
         manifest references the previous snapshot's file set plus the delta
-        (like Iceberg fast-append). Per-superstep lineage/metrics appends are
-        therefore O(delta), not O(table) — a checkpointed run with S
-        supersteps writes S deltas instead of S full copies.
+        (like Iceberg fast-append), so S appends write S deltas instead of S
+        full copies. The table keeps its schema.
 
         The delta's schema must match the table's: a fast-append never rewrites
         existing files, so a drifted column set would otherwise be silently
@@ -122,27 +193,43 @@ class SnapshotCatalog:
             current_schema = self.read(name).schema
             # compare (name, type) only: nullability legitimately differs
             # between a freshly built delta and the parquet read-back
-            delta_sig = [(f.name, f.dataType) for f in df.schema.fields]
+            delta_sig = [(f.name, f.dataType) for f in _nullable(df.schema).fields]
             table_sig = [(f.name, f.dataType) for f in current_schema.fields]
             if sorted(delta_sig, key=str) != sorted(table_sig, key=str):
                 raise ValueError(
                     f"append schema mismatch for table {name!r}: "
                     f"delta={df.schema.simpleString()} vs table={current_schema.simpleString()}"
                 )
-            man = self._load_manifest(name)
-            snap = next(s for s in man["snapshots"] if s["version"] == man["current"])
+            snap = self._snapshot(name)
             base = snap.get("paths") or [snap["path"]]
-            return self._commit(name, df, "append", base_paths=base)
+            return self._commit(name, df, "append", base_paths=base, schema=current_schema)
         return self._commit(name, df, "append")
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
-        man = self._load_manifest(name)
-        if man["current"] is None:
-            raise FileNotFoundError(f"table {name} does not exist in {self.root}")
-        version = version or man["current"]
-        snap = next(s for s in man["snapshots"] if s["version"] == version)
+        """The snapshot as a DataFrame. Snapshots that recorded their schema
+        are read with it (no inference job); older ones are inferred."""
+        snap = self._snapshot(name, version)
         paths = snap.get("paths") or [snap["path"]]
-        return self.spark.read.parquet(*paths)
+        reader = self.spark.read
+        if "schema" in snap:
+            reader = reader.schema(StructType.fromJson(snap["schema"]))
+        return reader.parquet(*paths)
+
+    def tables(self) -> list[str]:
+        """Names of the tables under the catalog root."""
+        return sorted(n for n in os.listdir(self.root) if os.path.exists(self._manifest_path(n)))
+
+    def annotate(self, name: str, key: str, row: dict) -> None:
+        """Append ``row`` to the table's ``key`` metadata list with an
+        atomic manifest swap — no snapshot and no Spark job (the analogue of
+        Iceberg's snapshot-independent statistics/properties updates). The
+        table need not have a snapshot yet."""
+        man = self._load_manifest(name)
+        man.setdefault(key, []).append(row)
+        self._swap_manifest(name, man)
+
+    def annotations(self, name: str, key: str) -> list[dict]:
+        return self._load_manifest(name).get(key, [])
 
     def history(self, name: str) -> list[dict]:
         return self._load_manifest(name)["snapshots"]
